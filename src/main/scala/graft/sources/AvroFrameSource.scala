@@ -374,7 +374,6 @@ class AvroFrameScanBuilder(fullSchema: StructType, options: CaseInsensitiveStrin
         yield (k, n.toInt),
       onPlanned, pruneOnly,
       options.get("avroSchemaHistory"),
-      options.getBoolean("columnar", true),
       Option(options.get("sortedBy")),
       FrameTimePart.fromOptions(options))
 }
@@ -407,7 +406,6 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
                     onPlanned: Array[java.io.File] => Unit = _ => (),
                     pruneOnly: Array[Filter] = Array.empty,
                     historyJson: String = null,
-                    columnar: Boolean = true,
                     sortedBy: Option[String] = None,
                     timePart: Option[FrameTimePart] = None)
     extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeV2Filtering
@@ -806,65 +804,60 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
   // always survive)
   override def planInputPartitions(): Array[InputPartition] = {
     val dvs = dvFor()
-    def dvPath(f: java.io.File): Option[String] = dvs.get(f.getName).map(_.getAbsolutePath)
     // round 17: per-split bloom-probe hint — tasks whose segment the
     // ledger proves bloom-less (for the pushed columns) skip the
     // executor-side sidecar probe entirely
-    def probe(f: java.io.File): Boolean = statsView.probeBloom(f, pushed)
+    def member(f: java.io.File): FrameMember =
+      FrameMember(f.getAbsolutePath, dvs.get(f.getName).map(_.getAbsolutePath),
+        statsView.probeBloom(f, pushed))
+    val segs = plannedSegments()
+    lastPlanned = segs.length; lastUniverse = segmentsAsOf().length
+    // plain row scans read columnar (round 15); a pushed TopN keeps a
+    // row heap, so its splits stay row-shaped
+    val columnar = topN.isEmpty
     aggs match {
       case Some(_) if aggComplete =>
         // one split carrying the full surviving segment list: the reader
         // combines sidecars executor-side and emits THE final row —
         // sidecar reads are O(bytes of metadata), no segment is opened
         // (vectored segments fall back to a decode inside the reader)
-        val segs = plannedSegments()
-        lastPlanned = segs.length; lastUniverse = segmentsAsOf().length
-        Array(AvroFrameAggPartition(segs.map(_.getAbsolutePath).toSeq,
-          segs.map(dvPath).toSeq, segs.map(probe).toSeq))
+        Array(AvroFrameAggPartition(segs.map(member).toSeq))
       case Some(_) =>
         // partial: one split per segment, each emitting exactly one
         // partial row (Spark's final aggregate merges). A split is
         // planned even when everything pruned away: the rewritten
         // count = SUM(partial counts) must see a 0, not an empty input.
-        val segs = plannedSegments()
-        lastPlanned = segs.length; lastUniverse = segmentsAsOf().length
         if (segs.isEmpty) Array(AvroFrameAggPartition(Seq.empty))
-        else segs.map(f => AvroFrameAggPartition(Seq(f.getAbsolutePath),
-          Seq(dvPath(f)), Seq(probe(f))): InputPartition)
-      case None => bucketedRead match {
-        case Some((_, n)) =>
-          // one split per bucket (including empty buckets — both sides of
-          // a storage-partitioned join must report identical values);
-          // stat-pruned segments just drop out of their bucket's file list
-          val segs = plannedSegments()
-          lastPlanned = segs.length; lastUniverse = segmentsAsOf().length
-          onPlanned(segs)
-          val byBucket = segs.groupBy(f => AvroFrames.bucketOf(f.getName).get)
-          (0 until n).map { b =>
-            val fs = byBucket.getOrElse(b, Array.empty)
-            AvroFrameBucketPartition(fs.map(_.getAbsolutePath).toSeq, b,
-              fs.map(dvPath).toSeq, fs.map(probe).toSeq): InputPartition
-          }.toArray
-        case None =>
-          val segs = plannedSegments()
-          lastPlanned = segs.length; lastUniverse = segmentsAsOf().length
-          onPlanned(segs)
-          segs.map(f => AvroFramePartition(f.getAbsolutePath, dvPath(f),
-            probe(f)): InputPartition)
-      }
+        else segs.map(f => AvroFrameAggPartition(Seq(member(f))): InputPartition)
+      case None =>
+        onPlanned(segs)
+        bucketedRead match {
+          case Some((_, n)) =>
+            // one split per bucket (including empty buckets — both sides
+            // of a storage-partitioned join must report identical
+            // values); stat-pruned segments just drop out of their
+            // bucket's member list
+            val byBucket = segs.groupBy(f => AvroFrames.bucketOf(f.getName).get)
+            (0 until n).map { b =>
+              AvroFrameBucketPartition(byBucket.getOrElse(b, Array.empty).map(member).toSeq,
+                b, columnar): InputPartition
+            }.toArray
+          case None =>
+            segs.map(f => AvroFramePartition(Seq(member(f)), columnar): InputPartition)
+        }
     }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new AvroFrameReaderFactory(avroSchemaJson, schemaId,
-      required.fieldNames, pushed, aggs, limit, historyJson, topN, columnar)
+      required.fieldNames, pushed, aggs, limit, historyJson, topN)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new AvroFrameMicroBatchStream(path, avroSchemaJson, schemaId,
       required.fieldNames, pushed, maxSegmentsPerTrigger, historyJson)
 }
 
-/** One segment split; `dv` is the absolute path of the segment's
+/** One segment of a split. `dv` is the absolute path of the segment's
   * active deletion vector (round 15) — positions in it are skipped by
   * every reader, so a merge-on-read DELETE is invisible above the scan.
   * `probeBloom` (round 17) is the driver's ledger-derived hint for the
@@ -872,31 +865,38 @@ class AvroFrameScan(path: String, avroSchemaJson: String, schemaId: Int,
   * bloom payload on any pushed equality column (or the driver already
   * verified it), so the task skips the sidecar probe before decode.
   */
-case class AvroFramePartition(file: String, dv: Option[String] = None,
-                              probeBloom: Boolean = true) extends InputPartition
+case class FrameMember(file: String, dv: Option[String] = None, probeBloom: Boolean = true)
 
-/** Split for a bucketed read: all surviving segments of one bucket
-  * (with their deletion vectors, parallel to `files`; empty = none),
+/** A row-scan split: its members in log order, read either as rows or
+  * as columnar batches (the scan decides per plan; every split of one
+  * scan agrees, as Spark requires).
+  */
+sealed trait FrameRowSplit extends InputPartition {
+  def members: Seq[FrameMember]
+  def columnar: Boolean
+}
+
+/** One-segment split of a plain batch scan or a micro-batch. */
+case class AvroFramePartition(members: Seq[FrameMember], columnar: Boolean = false)
+    extends FrameRowSplit
+
+/** Split for a bucketed read: all surviving segments of one bucket,
   * keyed by the bucket ordinal — the [[HasPartitionKey]] handle Spark's
   * storage-partitioned join groups and aligns on.
   */
-case class AvroFrameBucketPartition(files: Seq[String], bucket: Int,
-                                    dvs: Seq[Option[String]] = Seq.empty,
-                                    probes: Seq[Boolean] = Seq.empty)
-    extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
+case class AvroFrameBucketPartition(members: Seq[FrameMember], bucket: Int,
+                                    columnar: Boolean = false)
+    extends FrameRowSplit with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
 }
 
-/** Split for a pushed-aggregation read: the segment files whose
-  * contributions this split combines into one emitted row (deletion
-  * vectors parallel to `files`; empty = none). Complete mode ships the
-  * whole surviving list in one split; partial mode one segment per
-  * split (empty list = the zero row).
+/** Split for a pushed-aggregation read: the segments whose
+  * contributions this split combines into one emitted row. Complete
+  * mode ships the whole surviving list in one split; partial mode one
+  * segment per split (empty list = the zero row).
   */
-case class AvroFrameAggPartition(files: Seq[String],
-                                 dvs: Seq[Option[String]] = Seq.empty,
-                                 probes: Seq[Boolean] = Seq.empty) extends InputPartition
+case class AvroFrameAggPartition(members: Seq[FrameMember]) extends InputPartition
 
 /** A pushed aggregate the frame source can answer. Min/Max carry the
   * Spark-facing column type so sidecar values (normalized to
@@ -967,6 +967,45 @@ case class SegmentOffset(segments: Int) extends Offset {
   override def json(): String = segments.toString
 }
 
+/** The version count both frame streams read their latest offset from,
+  * clamped to the committed offset. `totalVersions` reads the manifest
+  * and the live listing WITHOUT the commit lock, so a concurrent
+  * maintenance publish (e.g. a DELETE that has retired the segment but
+  * not yet surfaced its manifest entry) can transiently read LOW —
+  * observed as a (committed, lower] range crash in the
+  * continuous-matview spec. Versions are append-only (rollback MINTS
+  * one, never removes), so a reading below the committed offset is
+  * always a torn read; clamping makes the trigger a no-op and the next
+  * one sees the settled state. A torn read clamps for one or two
+  * triggers; a reading that STAYS below the committed offset is durable
+  * manifest corruption, which a silent clamp would mask as an eternally
+  * idle stream — so every engagement warns with its consecutive count
+  * (ADVICE r17).
+  *
+  * Under `Trigger.AvailableNow` the count is snapshotted once at start
+  * ([[snapshotForAvailableNow]]) and the stream drains up to it in
+  * admission-bounded batches, then stops.
+  */
+final class FrameVersionClamp(dir: java.io.File) {
+  @volatile private var availableNowCap: Option[Int] = None
+  private var consecutiveClamps = 0
+
+  def snapshotForAvailableNow(): Unit =
+    availableNowCap = Some(FrameMaintenance.totalVersions(dir))
+
+  /** Version count to read up to, never below the committed `from`. */
+  def latest(from: Int): Int = {
+    val raw = availableNowCap.getOrElse(FrameMaintenance.totalVersions(dir))
+    if (raw < from) {
+      consecutiveClamps += 1
+      System.err.println(s"[graft] WARNING: totalVersions($dir) read $raw below the " +
+        s"committed offset $from (consecutive clamp #$consecutiveClamps); treating as " +
+        "a torn read — persistent clamping indicates manifest corruption")
+    } else consecutiveClamps = 0
+    math.max(from, raw)
+  }
+}
+
 /** MicroBatchStream over a framed-Avro segment log — O1's transport as
   * a REAL pluggable streaming source with its own offset management,
   * the closest offline analog to `KafkaUtils.createDirectStream`
@@ -997,14 +1036,11 @@ class AvroFrameMicroBatchStream(path: String, avroSchemaJson: String,
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private def dir = new java.io.File(path)
+  private val versions = new FrameVersionClamp(dir)
 
-  // Trigger.AvailableNow: snapshot the version count once at start,
-  // drain up to it in admission-bounded batches, then stop — without
-  // this interface MicroBatchExecution downgrades to Trigger.Once
-  // semantics and ignores the read limit
-  @volatile private var availableNowCap: Option[Int] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(FrameMaintenance.totalVersions(dir))
+  // Trigger.AvailableNow: without this interface MicroBatchExecution
+  // downgrades to Trigger.Once semantics and ignores the read limit
+  override def prepareForTriggerAvailableNow(): Unit = versions.snapshotForAvailableNow()
 
   override def initialOffset(): Offset = SegmentOffset(0)
 
@@ -1019,24 +1055,9 @@ class AvroFrameMicroBatchStream(path: String, avroSchemaJson: String,
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
 
-  // see FrameChangesMicroBatchStream: warn on every clamp engagement so
-  // a durably corrupt manifest is distinguishable from a torn read
-  private var consecutiveClamps = 0
-
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[SegmentOffset].segments
-    // max(from, ·): totalVersions reads manifest + live listing without
-    // the commit lock and can transiently read LOW against a concurrent
-    // maintenance publish; versions are append-only, so clamp to the
-    // committed offset (see FrameChangesMicroBatchStream.latestOffset).
-    val raw = availableNowCap.getOrElse(FrameMaintenance.totalVersions(dir))
-    if (raw < from) {
-      consecutiveClamps += 1
-      System.err.println(s"[graft] WARNING: totalVersions($dir) read $raw below the " +
-        s"committed offset $from (consecutive clamp #$consecutiveClamps); treating as " +
-        "a torn read — persistent clamping indicates manifest corruption")
-    } else consecutiveClamps = 0
-    val total = math.max(from, raw)
+    val total = versions.latest(from)
     limit match {
       case f: ReadMaxFiles =>
         // admission bounds APPENDS (files), not versions: the end
@@ -1075,7 +1096,7 @@ class AvroFrameMicroBatchStream(path: String, avroSchemaJson: String,
     // `_history/` are no longer ledgered and fall back to their
     // (retired-alongside) sidecars
     new FrameStatsView(dir).prune(batch.toArray, pushed)
-      .map(f => AvroFramePartition(f.getAbsolutePath): InputPartition)
+      .map(f => AvroFramePartition(Seq(FrameMember(f.getAbsolutePath))): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1090,54 +1111,42 @@ class AvroFrameReaderFactory(avroSchemaJson: String, schemaId: Int,
                              requiredCols: Array[String], pushed: Array[Filter],
                              aggs: Option[Seq[FrameAgg]] = None, limit: Int = 0,
                              historyJson: String = null,
-                             topN: Option[FrameTopN] = None,
-                             columnar: Boolean = false)
+                             topN: Option[FrameTopN] = None)
     extends PartitionReaderFactory {
 
-  /** Columnar output (round 15) for plain row-scan splits — pushed
-    * aggregates emit one summary row and pushed TopN keeps a row heap,
-    * both stay on the row readers. Spark requires ALL splits of a scan
-    * to agree, which holds: a scan plans either all-row-shaped or
-    * all-agg splits.
+  /** Columnar output (round 15) is a property of the split: the batch
+    * scan plans its plain row splits columnar, while pushed aggregates
+    * (one summary row), pushed TopN (a row heap) and micro-batches
+    * stay row-shaped.
     */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && aggs.isEmpty && topN.isEmpty &&
-      (partition.isInstanceOf[AvroFramePartition] ||
-        partition.isInstanceOf[AvroFrameBucketPartition])
+    partition match {
+      case s: FrameRowSplit => s.columnar
+      case _                => false
+    }
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     partition match {
-      case AvroFramePartition(file, dv, probeBloom) =>
-        new AvroFrameColumnarReader(Seq(file), Seq(dv), avroSchemaJson, schemaId,
-          requiredCols, pushed, limit, historyJson, Seq(probeBloom))
-      case AvroFrameBucketPartition(files, _, dvs, probes) =>
-        new AvroFrameColumnarReader(files, dvs, avroSchemaJson, schemaId,
-          requiredCols, pushed, limit, historyJson, probes)
+      case s: FrameRowSplit =>
+        new AvroFrameColumnarReader(s.members, avroSchemaJson, schemaId,
+          requiredCols, pushed, limit, historyJson)
       case other => throw new IllegalStateException(s"not a columnar split: $other")
     }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case AvroFrameAggPartition(files, dvs, probes) =>
-        new AvroFrameAggReader(files, avroSchemaJson, schemaId, aggs.get, pushed,
-          historyJson, dvs, probes)
-      case AvroFramePartition(file, dv, probeBloom) =>
-        wrapTopN(new AvroFrameReader(file, avroSchemaJson, schemaId, requiredCols, pushed,
-          limit, historyJson, dv, probeBloom))
-      case AvroFrameBucketPartition(files, _, dvs, probes) =>
-        wrapTopN(new AvroFrameMultiReader(files, avroSchemaJson, schemaId, requiredCols,
-          pushed, limit, historyJson, dvs, probes))
-    }
-
-  /** Bounded-heap decoration of a row reader for a pushed TopN. */
-  private def wrapTopN(inner: PartitionReader[InternalRow]): PartitionReader[InternalRow] =
-    topN match {
-      case Some(t) => new FrameTopNReader(inner, t, requiredCols,
-        AvroFrames.sparkSchema(new Schema.Parser().parse(avroSchemaJson)))
-      case None    => inner
+      case AvroFrameAggPartition(members) =>
+        new AvroFrameAggReader(members, avroSchemaJson, schemaId, aggs.get, pushed,
+          historyJson)
+      case s: FrameRowSplit =>
+        val rows = new AvroFrameReader(s.members, avroSchemaJson, schemaId, requiredCols,
+          pushed, limit, historyJson)
+        topN match {
+          case Some(t) => new FrameTopNReader(rows, t, requiredCols)
+          case None    => rows
+        }
     }
 }
-
 /** Scan observability (round 14): DSv2 custom metrics surfaced in the
   * Spark UI's SQL tab per scan node — the operational counters a log
   * reader needs: how many segments the planner kept vs pruned
@@ -1182,16 +1191,19 @@ case class FrameTopN(keys: Seq[FrameSortKey], limit: Int)
   * heap (worst-on-top), then replays them. Sort keys are read from the
   * MATERIALIZED row (Spark guarantees the required columns include the
   * order-by columns when it pushes a partial TopN), compared in
-  * Catalyst value form. Memory is O(limit) per split by construction.
+  * Catalyst value form at the row reader's own column types. Memory is
+  * O(limit) per split by construction.
   */
-class FrameTopNReader(inner: PartitionReader[InternalRow], topN: FrameTopN,
-                      requiredCols: Array[String], tableSchema: StructType)
+class FrameTopNReader(inner: AvroFrameReader, topN: FrameTopN, requiredCols: Array[String])
     extends PartitionReader[InternalRow] {
 
   private val keyIdx: Array[Int] = topN.keys.map(k => requiredCols.indexOf(k.col)).toArray
   require(keyIdx.forall(_ >= 0),
     s"pushed TopN keys ${topN.keys.map(_.col)} must be in the read schema " +
       requiredCols.mkString("[", ",", "]"))
+  private val keyType: Array[DataType] = keyIdx.map(inner.types(_))
+  private val asc: Array[Boolean] = topN.keys.map(_.asc).toArray
+  private val nullsFirst: Array[Boolean] = topN.keys.map(_.nullsFirst).toArray
 
   /** Total order on rows per the pushed keys; rows compare EQUAL past
     * the keys (any of them may be kept — Spark's final sort decides).
@@ -1200,24 +1212,22 @@ class FrameTopNReader(inner: PartitionReader[InternalRow], topN: FrameTopN,
     override def compare(a: InternalRow, b: InternalRow): Int = {
       var i = 0
       while (i < keyIdx.length) {
-        val k = topN.keys(i)
-        val t = tableSchema.find(_.name == k.col)
-          .map(_.dataType).getOrElse(StringType)
-        val an = a.isNullAt(keyIdx(i)); val bn = b.isNullAt(keyIdx(i))
+        val j = keyIdx(i)
+        val an = a.isNullAt(j); val bn = b.isNullAt(j)
         val c =
           if (an && bn) 0
-          else if (an) { if (k.nullsFirst) -1 else 1 }
-          else if (bn) { if (k.nullsFirst) 1 else -1 }
+          else if (an) { if (nullsFirst(i)) -1 else 1 }
+          else if (bn) { if (nullsFirst(i)) 1 else -1 }
           else {
-            val raw = t match {
-              case _: IntegerType => Integer.compare(a.getInt(keyIdx(i)), b.getInt(keyIdx(i)))
-              case _: LongType    => java.lang.Long.compare(a.getLong(keyIdx(i)), b.getLong(keyIdx(i)))
-              case _: FloatType   => java.lang.Float.compare(a.getFloat(keyIdx(i)), b.getFloat(keyIdx(i)))
-              case _: DoubleType  => java.lang.Double.compare(a.getDouble(keyIdx(i)), b.getDouble(keyIdx(i)))
-              case _: BooleanType => java.lang.Boolean.compare(a.getBoolean(keyIdx(i)), b.getBoolean(keyIdx(i)))
-              case _              => a.getUTF8String(keyIdx(i)).compareTo(b.getUTF8String(keyIdx(i)))
+            val raw = keyType(i) match {
+              case _: IntegerType => Integer.compare(a.getInt(j), b.getInt(j))
+              case _: LongType    => java.lang.Long.compare(a.getLong(j), b.getLong(j))
+              case _: FloatType   => java.lang.Float.compare(a.getFloat(j), b.getFloat(j))
+              case _: DoubleType  => java.lang.Double.compare(a.getDouble(j), b.getDouble(j))
+              case _: BooleanType => java.lang.Boolean.compare(a.getBoolean(j), b.getBoolean(j))
+              case _              => a.getUTF8String(j).compareTo(b.getUTF8String(j))
             }
-            if (k.asc) raw else -raw
+            if (asc(i)) raw else -raw
           }
         if (c != 0) return c
         i += 1
@@ -1252,63 +1262,11 @@ class FrameTopNReader(inner: PartitionReader[InternalRow], topN: FrameTopN,
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     inner.currentMetricsValues()
 }
-
-/** Chained reader over one bucket's segment files (in log order) — the
-  * per-split body of a bucketed read. The pushed LIMIT bounds TOTAL
-  * rows across the chain (sound: Spark re-applies the global limit).
-  */
-class AvroFrameMultiReader(files: Seq[String], avroSchemaJson: String,
-                           schemaId: Int, requiredCols: Array[String],
-                           pushed: Array[Filter], limit: Int = 0,
-                           historyJson: String = null,
-                           dvs: Seq[Option[String]] = Seq.empty,
-                           probes: Seq[Boolean] = Seq.empty)
-    extends PartitionReader[InternalRow] {
-  private var idx = 0
-  private var cur: AvroFrameReader = null
-  private var emitted = 0L
-  private var closedMalformed = 0L
-
-  override def next(): Boolean = {
-    if (limit > 0 && emitted >= limit) return false
-    while (true) {
-      if (cur == null) {
-        if (idx >= files.length) return false
-        cur = new AvroFrameReader(files(idx), avroSchemaJson, schemaId,
-          requiredCols, pushed, 0, historyJson,
-          if (idx < dvs.length) dvs(idx) else None,
-          if (idx < probes.length) probes(idx) else true)
-        idx += 1
-      }
-      if (cur.next()) { emitted += 1; return true }
-      closedMalformed += cur.malformed
-      if (cur.bloomSkipped) skippedTally += 1
-      cur.close(); cur = null
-    }
-    false
-  }
-
-  override def get(): InternalRow = cur.get()
-  override def close(): Unit = if (cur != null) cur.close()
-
-  private def bloomSkips: Long = {
-    // chain readers record their own gate; count the closed ones via a
-    // running tally maintained in next()
-    skippedTally + (if (cur != null && cur.bloomSkipped) 1L else 0L)
-  }
-  private var skippedTally = 0L
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(FrameScanMetrics.Value("frames_emitted", emitted),
-      FrameScanMetrics.Value("frames_malformed",
-        closedMalformed + (if (cur != null) cur.malformed else 0L)),
-      FrameScanMetrics.Value("segments_bloom_skipped", bloomSkips))
-}
-
 /** Sequential decoder over one segment file: streams length-prefixed
   * frames, decodes each body with a reused per-schema-id
   * GenericDatumReader / decoder, counts-and-skips malformed frames.
-  * Shared by the row reader and the pushed-aggregation reader.
+  * Driven by [[FrameCursor]] under every scan reader, and directly by
+  * the change feed's and maintenance's byte walks.
   *
   * Multi-schema (round 14, schema evolution): `schemas` is the
   * registry — embedded id → writer schema — and every frame resolves
@@ -1403,115 +1361,185 @@ class FrameDecoder(file: String, readerSchema: Schema, schemas: Map[Int, Schema]
   def close(): Unit = in.close()
 }
 
-/** Per-split reader: applies the pushed filters on each decoded record
-  * and materializes ONLY the required columns; with a pushed LIMIT it
-  * stops decoding after `limit` emitted rows (sound: Spark re-applies
-  * the global limit, and any n rows satisfy an unordered LIMIT n).
-  * Exposed as a plain class so SourcesSpec can drive it directly and
-  * count what crosses the scan boundary.
+/** The decode loop under every frame-scan reader: walks a split's
+  * members in log order and yields each decoded record that passes the
+  * pushed filters. Per member it runs the executor-side bloom gate
+  * (round 16: a segment whose own sidecar proves no row matches the
+  * pushed equality filters is never opened; the member's probe hint,
+  * round 17, spares bloom-less segments the sidecar read), then opens a
+  * [[FrameDecoder]] against the table's current schema and its schema
+  * history with the member's deletion vector attached. A pushed LIMIT
+  * bounds the records yielded across the whole split (sound: Spark
+  * re-applies the global limit, and any n rows satisfy an unordered
+  * LIMIT n). The cursor keeps the three task counters every scan node
+  * reports. The first member is gated and opened at construction, so
+  * [[bloomSkipped]] is meaningful before the first [[next]].
   */
-class AvroFrameReader(file: String, avroSchemaJson: String, schemaId: Int,
-                      requiredCols: Array[String], pushed: Array[Filter],
-                      limit: Int = 0, historyJson: String = null,
-                      dv: Option[String] = None, probeBloom: Boolean = true)
-    extends PartitionReader[InternalRow] {
+final class FrameCursor(members: Seq[FrameMember], avroSchemaJson: String, schemaId: Int,
+                        pushed: Array[Filter], historyJson: String = null, limit: Int = 0) {
 
   // the table's CURRENT schema is the reader schema; frames written
   // under earlier schema versions resolve against it (missing fields
   // take their declared null defaults — the ADD COLUMN contract)
-  private val readerSchema = new Schema.Parser().parse(avroSchemaJson)
-  // executor-side bloom gate (round 16): the segment's own sidecar can
-  // prove no row matches the pushed equality filters — then the data
-  // file is never even opened. The split's ledger-derived hint (round
-  // 17) skips the probe when no relevant bloom payload can exist.
-  private val bloomBlocked: Boolean = probeBloom && AvroFrameStats.bloomBlocked(file, pushed)
-  private val dec: FrameDecoder =
-    if (bloomBlocked) null
-    else new FrameDecoder(file, readerSchema,
-      AvroFrames.schemaHistory(avroSchemaJson, schemaId, historyJson))
-  if (dec != null) dv.foreach(d => dec.deleted = FrameDv.cursor(d))
-  private val fieldPos: Map[String, Int] =
+  private val schemas = AvroFrames.schemaHistory(avroSchemaJson, schemaId, historyJson)
+  private val readerSchema = schemas(schemaId)
+  val fieldPos: Map[String, Int] =
     readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
-  // metadata columns materialize from the reader's own state, not the
-  // decoded record — encoded as negative positions
-  private val MetaSeg = -1
-  private val MetaOff = -2
-  private val requiredPos: Array[Int] = requiredCols.map {
-    case AvroFrames.SegmentMetaCol => MetaSeg
-    case AvroFrames.OffsetMetaCol  => MetaOff
+  private val preds: Array[GenericRecord => Boolean] =
+    pushed.map(AvroFrames.compile(fieldPos, _))
+
+  private val pending = members.iterator
+  private var dec: FrameDecoder = null
+  private var segmentName: UTF8String = null
+  private var closedMalformed = 0L
+  private var emittedN = 0L
+  private var skippedN = 0L
+  private var openedN = 0L
+
+  openNext()
+
+  private def closeCurrent(): Unit =
+    if (dec != null) { closedMalformed += dec.malformed; dec.close(); dec = null }
+
+  private def openNext(): Unit = {
+    closeCurrent()
+    while (dec == null && pending.hasNext) {
+      val m = pending.next()
+      if (m.probeBloom && AvroFrameStats.bloomBlocked(m.file, pushed)) skippedN += 1
+      else {
+        dec = new FrameDecoder(m.file, readerSchema, schemas)
+        m.dv.foreach(d => dec.deleted = FrameDv.cursor(d))
+        segmentName = UTF8String.fromString(new java.io.File(m.file).getName)
+        openedN += 1
+      }
+    }
+  }
+
+  /** Next record passing the pushed filters, or null at the end of the
+    * split or the pushed LIMIT. The record is REUSED by the next call.
+    */
+  def next(): GenericRecord = {
+    if (limit > 0 && emittedN >= limit) return null
+    while (dec != null) {
+      val rec = dec.nextRecord()
+      if (rec == null) openNext()
+      else if (passes(rec)) { emittedN += 1; return rec }
+    }
+    null
+  }
+
+  private def passes(rec: GenericRecord): Boolean = {
+    var i = 0
+    while (i < preds.length) {
+      if (!preds(i)(rec)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Segment name and 0-based frame ordinal of the last record. */
+  def segment: UTF8String = segmentName
+  def position: Long = dec.position
+
+  def malformed: Long = closedMalformed + (if (dec != null) dec.malformed else 0L)
+  def bloomSkipped: Long = skippedN
+  def opened: Long = openedN
+
+  def metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(FrameScanMetrics.Value("frames_emitted", emittedN),
+      FrameScanMetrics.Value("frames_malformed", malformed),
+      FrameScanMetrics.Value("segments_bloom_skipped", skippedN))
+
+  /** Record ordinal of each projected column, or [[FrameCursor.SegmentCol]]
+    * / [[FrameCursor.OffsetCol]] for the metadata columns, which
+    * materialize from the cursor's own state.
+    */
+  def ordinals(cols: Array[String]): Array[Int] = cols.map {
+    case AvroFrames.SegmentMetaCol => FrameCursor.SegmentCol
+    case AvroFrames.OffsetMetaCol  => FrameCursor.OffsetCol
     case c                         => fieldPos(c)
   }
-  private val requiredTypes: Array[DataType] = {
+
+  /** Spark type of each projected column. */
+  def types(cols: Array[String]): Array[DataType] = {
     val spark = AvroFrames.sparkSchema(readerSchema)
-    requiredCols.map {
+    cols.map {
       case AvroFrames.SegmentMetaCol => StringType
       case AvroFrames.OffsetMetaCol  => LongType
       case c                         => spark(c).dataType
     }
   }
-  private val segmentName = UTF8String.fromString(new java.io.File(file).getName)
-  private val preds: Array[GenericRecord => Boolean] =
-    pushed.map(AvroFrames.compile(fieldPos, _))
+
+  def close(): Unit = closeCurrent()
+}
+
+object FrameCursor {
+  final val SegmentCol = -1
+  final val OffsetCol = -2
+}
+
+/** Row reader for single-segment, bucket-chain and micro-batch splits:
+  * materializes ONLY the required columns of each record the cursor
+  * yields. Exposed as a plain class so SourcesSpec can drive it
+  * directly and count what crosses the scan boundary.
+  */
+class AvroFrameReader(members: Seq[FrameMember], avroSchemaJson: String, schemaId: Int,
+                      requiredCols: Array[String], pushed: Array[Filter],
+                      limit: Int = 0, historyJson: String = null)
+    extends PartitionReader[InternalRow] {
+
+  private val cursor = new FrameCursor(members, avroSchemaJson, schemaId, pushed,
+    historyJson, limit)
+  private val ordinals = cursor.ordinals(requiredCols)
+  /** Spark types of the required columns, in order. */
+  val types: Array[DataType] = cursor.types(requiredCols)
 
   private var current: InternalRow = null
-  private var emitted: Long = 0L
-  def malformed: Long = if (dec == null) 0L else dec.malformed // visible to SourcesSpec
-  def bloomSkipped: Boolean = bloomBlocked // visible to FrameBloomSpec
+  def malformed: Long = cursor.malformed // visible to SourcesSpec
+  def bloomSkipped: Boolean = cursor.bloomSkipped > 0 // visible to FrameBloomSpec
 
   override def next(): Boolean = {
-    if (dec == null) return false // bloom-blocked: zero rows by proof
-    if (limit > 0 && emitted >= limit) return false
-    while (true) {
-      val rec = dec.nextRecord()
-      if (rec == null) return false
-      if (preds.forall(_(rec))) {
-        val row = new GenericInternalRow(requiredPos.length)
-        var i = 0
-        while (i < requiredPos.length) {
-          val p = requiredPos(i)
-          row.update(i,
-            if (p == MetaSeg) segmentName
-            else if (p == MetaOff) dec.position
-            else AvroFrames.convert(rec.get(p), requiredTypes(i)))
-          i += 1
-        }
-        current = row
-        emitted += 1
-        return true
-      }
+    val rec = cursor.next()
+    if (rec == null) return false
+    val row = new GenericInternalRow(ordinals.length)
+    var i = 0
+    while (i < ordinals.length) {
+      val p = ordinals(i)
+      row.update(i,
+        if (p == FrameCursor.SegmentCol) cursor.segment
+        else if (p == FrameCursor.OffsetCol) cursor.position
+        else AvroFrames.convert(rec.get(p), types(i)))
+      i += 1
     }
-    false
+    current = row
+    true
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = if (dec != null) dec.close()
+  override def close(): Unit = cursor.close()
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(FrameScanMetrics.Value("frames_emitted", emitted),
-      FrameScanMetrics.Value("frames_malformed", malformed),
-      FrameScanMetrics.Value("segments_bloom_skipped", if (bloomBlocked) 1L else 0L))
+    cursor.metrics
 }
 
 /** Reader for a pushed-aggregation split: emits EXACTLY ONE row — the
-  * aggregate over its segment list. Per segment, the contribution
-  * comes from the stats sidecar when that is provably exact (no pushed
-  * row filters, sidecar readable); otherwise the segment is decoded
-  * with the filters applied — so a complete-pushdown plan normally
-  * opens ZERO segment files, and a foreign sidecar-less segment
-  * degrades that one segment to a decode, never to a wrong answer.
+  * aggregate over its members. Per segment, the contribution comes from
+  * the stats sidecar when that is provably exact (no pushed row
+  * filters, sidecar readable); otherwise the segment is decoded through
+  * a [[FrameCursor]] with the filters applied — so a complete-pushdown
+  * plan normally opens ZERO segment files, and a foreign sidecar-less
+  * segment degrades that one segment to a decode, never to a wrong
+  * answer. `frames_emitted` counts the frames folded.
   */
-class AvroFrameAggReader(files: Seq[String], avroSchemaJson: String,
+class AvroFrameAggReader(members: Seq[FrameMember], avroSchemaJson: String,
                          schemaId: Int, aggs: Seq[FrameAgg],
-                         pushed: Array[Filter], historyJson: String = null,
-                         dvs: Seq[Option[String]] = Seq.empty,
-                         probes: Seq[Boolean] = Seq.empty)
+                         pushed: Array[Filter], historyJson: String = null)
     extends PartitionReader[InternalRow] {
 
-  private val readerSchema = new Schema.Parser().parse(avroSchemaJson)
-  private val fieldPos: Map[String, Int] =
-    readerSchema.getFields.asScala.map(f => f.name() -> f.pos()).toMap
   private var done = false
-  var decodedSegments: Long = 0L // visible to SourcesSpec
+  // the decode fallback; stays null when metadata answers every member
+  private var cursor: FrameCursor = null
+  def decodedSegments: Long = if (cursor == null) 0L else cursor.opened // visible to SourcesSpec
 
   // running state per agg: counts as Long, min/max in the stats value
   // domain (Long / Double / String / Boolean, ints and floats widened —
@@ -1556,71 +1584,56 @@ class AvroFrameAggReader(files: Seq[String], avroSchemaJson: String,
     case other                => other
   }
 
-  private def decodeSegment(file: String, dv: Option[String]): Unit = {
-    decodedSegments += 1
-    val preds = pushed.map(AvroFrames.compile(fieldPos, _))
-    val aggPos: Array[Int] = aggs.map {
-      case FrameCountCol(c) => fieldPos(c)
-      case FrameMin(c, _)   => fieldPos(c)
-      case FrameMax(c, _)   => fieldPos(c)
-      case FrameCountStar   => -1
-    }.toArray
-    val dec = new FrameDecoder(file, readerSchema,
-      AvroFrames.schemaHistory(avroSchemaJson, schemaId, historyJson))
-    dv.foreach(d => dec.deleted = FrameDv.cursor(d))
-    try {
-      var rec = dec.nextRecord()
-      while (rec != null) {
-        if (preds.forall(_(rec))) {
-          var i = 0
-          while (i < aggs.length) {
-            aggs(i) match {
-              case FrameCountStar   => counts(i) += 1
-              case FrameCountCol(_) => if (rec.get(aggPos(i)) != null) counts(i) += 1
-              case FrameMin(_, _) =>
-                val v = rec.get(aggPos(i)); if (v != null) merge(i, normalize(v), -1)
-              case FrameMax(_, _) =>
-                val v = rec.get(aggPos(i)); if (v != null) merge(i, normalize(v), 1)
-            }
-            i += 1
-          }
+  /** Folds a member's contribution from metadata alone when that is
+    * exact; false = the member must be decoded. A vectored segment's
+    * sidecar describes the PRE-delete superset (stale min/max, stale
+    * null counts), so only pure COUNT(*) stays on metadata there:
+    * vectors hold decodable positions only, so `frames − |dv|` is the
+    * exact live count and the segment still never opens.
+    */
+  private def foldFromMetadata(m: FrameMember): Boolean =
+    pushed.isEmpty && (m.dv match {
+      case None =>
+        AvroFrameStats.read(new java.io.File(m.file)).exists { case (frames, fields) =>
+          sidecarAnswers(frames, fields) && { observeSidecar(frames, fields); true }
         }
-        rec = dec.nextRecord()
-      }
-    } finally dec.close()
-  }
+      case Some(dv) =>
+        aggs.forall(_ == FrameCountStar) &&
+          AvroFrameStats.read(new java.io.File(m.file)).exists { case (frames, _) =>
+            val live = frames - FrameDv.count(new java.io.File(dv))
+            counts.indices.foreach(counts(_) += live)
+            true
+          }
+    })
 
   override def next(): Boolean = {
     if (done) return false
-    files.zipWithIndex.foreach { case (f, i) =>
-      val dv = if (i < dvs.length) dvs(i) else None
-      // a vectored segment's sidecar describes the PRE-delete superset
-      // (stale min/max, stale null counts) — the decode path is the
-      // exact one, EXCEPT for pure COUNT(*): vectors hold decodable
-      // positions only, so `frames − |dv|` is the exact live count and
-      // the segment still never opens
-      val sidecarOk = pushed.isEmpty && dv.isEmpty &&
-        AvroFrameStats.read(new java.io.File(f)).exists { case (frames, fields) =>
-          sidecarAnswers(frames, fields) && { observeSidecar(frames, fields); true }
-        }
-      val countStarOk = !sidecarOk && pushed.isEmpty && dv.isDefined &&
-        aggs.forall(_ == FrameCountStar) &&
-        AvroFrameStats.read(new java.io.File(f)).exists { case (frames, _) =>
-          val live = frames - FrameDv.count(new java.io.File(dv.get))
-          counts.indices.foreach(counts(_) += live)
-          true
-        }
-      // bloom gate (round 16): a filtered partial aggregate skips
-      // segments whose own blooms prove zero matching rows — they
-      // contribute nothing to any of the pushed aggregates. The
-      // split's probe hint (round 17) spares bloom-less segments
-      // the sidecar read.
-      val probe = i >= probes.length || probes(i)
-      if (!sidecarOk && !countStarOk &&
-          !(probe && AvroFrameStats.bloomBlocked(f, pushed)))
-        decodeSegment(f, dv)
-    }
     done = true
+    val toDecode = members.filterNot(foldFromMetadata)
+    if (toDecode.isEmpty) return true
+    cursor = new FrameCursor(toDecode, avroSchemaJson, schemaId, pushed, historyJson)
+    val aggPos: Array[Int] = aggs.map {
+      case FrameCountCol(c) => cursor.fieldPos(c)
+      case FrameMin(c, _)   => cursor.fieldPos(c)
+      case FrameMax(c, _)   => cursor.fieldPos(c)
+      case FrameCountStar   => -1
+    }.toArray
+    var rec = cursor.next()
+    while (rec != null) {
+      var i = 0
+      while (i < aggs.length) {
+        aggs(i) match {
+          case FrameCountStar   => counts(i) += 1
+          case FrameCountCol(_) => if (rec.get(aggPos(i)) != null) counts(i) += 1
+          case FrameMin(_, _) =>
+            val v = rec.get(aggPos(i)); if (v != null) merge(i, normalize(v), -1)
+          case FrameMax(_, _) =>
+            val v = rec.get(aggPos(i)); if (v != null) merge(i, normalize(v), 1)
+        }
+        i += 1
+      }
+      rec = cursor.next()
+    }
     true
   }
 
@@ -1630,19 +1643,19 @@ class AvroFrameAggReader(files: Seq[String], avroSchemaJson: String,
     while (i < aggs.length) {
       aggs(i) match {
         case FrameCountStar | FrameCountCol(_) => row.update(i, counts(i))
-        case FrameMin(_, t) => row.update(i, toCatalyst(extremes(i), t))
-        case FrameMax(_, t) => row.update(i, toCatalyst(extremes(i), t))
+        case FrameMin(_, t) => row.update(i, AvroFrameStats.toCatalyst(extremes(i), t))
+        case FrameMax(_, t) => row.update(i, AvroFrameStats.toCatalyst(extremes(i), t))
       }
       i += 1
     }
     row
   }
 
-  private def toCatalyst(v: Any, t: DataType): Any = AvroFrameStats.toCatalyst(v, t)
+  override def close(): Unit = if (cursor != null) cursor.close()
 
-  override def close(): Unit = ()
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    if (cursor == null) Array.empty else cursor.metrics
 }
-
 /** Shared helpers: Avro→Spark schema mapping, value conversion, the
   * supported-filter predicate compiler, and the segment writer used by
   * tests/fixtures to produce the on-disk format.

@@ -234,10 +234,9 @@ class FrameChangesMicroBatchStream(path: String, avroSchemaJson: String,
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxFiles}
 
   private def dir = new java.io.File(path)
+  private val versions = new FrameVersionClamp(dir)
 
-  @volatile private var availableNowCap: Option[Int] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(FrameMaintenance.totalVersions(dir))
+  override def prepareForTriggerAvailableNow(): Unit = versions.snapshotForAvailableNow()
 
   override def initialOffset(): Offset = SegmentOffset(startVersion)
   override def deserializeOffset(json: String): Offset = SegmentOffset(json.trim.toInt)
@@ -250,32 +249,9 @@ class FrameChangesMicroBatchStream(path: String, avroSchemaJson: String,
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
 
-  // consecutive clamp engagements (ADVICE r17): a torn read clamps for
-  // one or two triggers; a reading that STAYS below the committed
-  // offset is durable manifest corruption, which a silent clamp would
-  // mask as an eternally idle stream — warn on every engagement so the
-  // two are distinguishable in the driver log.
-  private var consecutiveClamps = 0
-
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[SegmentOffset].segments
-    // max(from, ·): totalVersions reads the manifest and the live
-    // listing WITHOUT the commit lock, so a concurrent maintenance
-    // publish (e.g. a DELETE that has retired the segment but not yet
-    // surfaced its manifest entry) can transiently read LOW — observed
-    // as a (committed, lower] range crash in the continuous-matview
-    // spec. Versions are append-only (rollback MINTS one, never
-    // removes), so a reading below the committed offset is always a
-    // torn read; clamping makes the trigger a no-op and the next one
-    // sees the settled state.
-    val raw = availableNowCap.getOrElse(FrameMaintenance.totalVersions(dir))
-    if (raw < from) {
-      consecutiveClamps += 1
-      System.err.println(s"[graft] WARNING: totalVersions($dir) read $raw below the " +
-        s"committed offset $from (consecutive clamp #$consecutiveClamps); treating as " +
-        "a torn read — persistent clamping indicates manifest corruption")
-    } else consecutiveClamps = 0
-    val total = math.max(from, raw)
+    val total = versions.latest(from)
     limit match {
       case f: ReadMaxFiles => SegmentOffset(math.min(total, from + f.maxFiles()))
       case _               => SegmentOffset(total)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{AvroFrames, AvroFrameStats}
+import graft.sources.{AvroFrames, AvroFrameStats, FrameMember}
 
 /** Write-time Bloom filter sidecars ([[graft.sources.AvroFrameWrite]] /
   * [[AvroFrameStats.prune]]): point-lookup segment pruning on
@@ -68,14 +68,14 @@ class FrameBloomSpec extends AnyFunSuite with SparkFixture {
       new java.io.File(miss.getParentFile, miss.getName + ".stats").toPath,
       new java.io.File(missCopyDir, miss.getName + ".stats").toPath)
     // NOTE: ghost data file deliberately NOT created
-    val blocked = new graft.sources.AvroFrameReader(ghost.getAbsolutePath, schemaJson,
+    val blocked = new graft.sources.AvroFrameReader(Seq(FrameMember(ghost.getAbsolutePath)), schemaJson,
       AvroFrames.DefaultSchemaId, Array("id", "v"), Array(EqualTo("id", 7L)))
     assert(blocked.bloomSkipped, "the gate must fire from the sidecar alone")
     assert(!blocked.next(), "a bloom-blocked reader emits nothing")
     blocked.close()
 
     // unblocked reader on the containing segment still finds the row
-    val open = new graft.sources.AvroFrameReader(hit.getAbsolutePath, schemaJson,
+    val open = new graft.sources.AvroFrameReader(Seq(FrameMember(hit.getAbsolutePath)), schemaJson,
       AvroFrames.DefaultSchemaId, Array("id", "v"), Array(EqualTo("id", 7L)))
     assert(!open.bloomSkipped)
     assert(open.next() && open.get().getLong(0) == 7L)
@@ -83,7 +83,7 @@ class FrameBloomSpec extends AnyFunSuite with SparkFixture {
 
     // columnar chain: same gate, counted per skipped member
     val chain = new graft.sources.AvroFrameColumnarReader(
-      Seq(miss.getAbsolutePath, hit.getAbsolutePath), Seq(None, None),
+      Seq(FrameMember(miss.getAbsolutePath), FrameMember(hit.getAbsolutePath)),
       schemaJson, AvroFrames.DefaultSchemaId, Array("id"), Array(EqualTo("id", 7L)))
     var got = Vector.empty[Long]
     while (chain.next()) {
@@ -95,6 +95,20 @@ class FrameBloomSpec extends AnyFunSuite with SparkFixture {
       .exists(m => m.name == "segments_bloom_skipped" && m.value == 1L),
       "the skipped member must surface in the task metric")
     chain.close()
+
+    // partial-aggregate split over the same members: same gate, same
+    // task metric, and the folded frame counted as emitted
+    val agg = new graft.sources.AvroFrameAggReader(
+      Seq(FrameMember(miss.getAbsolutePath), FrameMember(hit.getAbsolutePath)),
+      schemaJson, AvroFrames.DefaultSchemaId, Seq(graft.sources.FrameCountStar),
+      Array(EqualTo("id", 7L)))
+    assert(agg.next() && agg.get().getLong(0) == 1L)
+    assert(agg.decodedSegments == 1L, "the blocked member must not be decoded")
+    val aggMetrics = agg.currentMetricsValues().map(m => m.name -> m.value).toMap
+    assert(aggMetrics.get("segments_bloom_skipped").contains(1L) &&
+      aggMetrics.get("frames_emitted").contains(1L),
+      s"the agg split must report its gate and its folded frames: $aggMetrics")
+    agg.close()
 
     // end-to-end value parity stands (the full-query path)
     assert(readBack(dir).filter(col("id") === 7L).count() == 1L)
@@ -143,7 +157,7 @@ class FrameBloomSpec extends AnyFunSuite with SparkFixture {
     // reader, no ledger knowledge = conservative true)
     import org.apache.spark.sql.sources.EqualTo
     val seg = AvroFrames.listSegments(withB).head
-    val r = new graft.sources.AvroFrameReader(seg.getAbsolutePath, schemaJson,
+    val r = new graft.sources.AvroFrameReader(Seq(FrameMember(seg.getAbsolutePath)), schemaJson,
       AvroFrames.DefaultSchemaId, Array("id"), Array(EqualTo("id", -1L)))
     assert(r.bloomSkipped, "conservative probe must still block a proven miss")
     assert(AvroFrameStats.bloomProbeReads.get() > before4)

@@ -293,9 +293,9 @@ class FrameDvSpec extends AnyFunSuite with SparkFixture {
     val files = AvroFrames.listSegments(dir).map(_.getAbsolutePath).toSeq
     val dvs = files.map(f => FrameDv.liveDvOf(new java.io.File(dir),
       new java.io.File(f).getName).map(new java.io.File(dir, _).getAbsolutePath))
-    val r = new graft.sources.AvroFrameAggReader(files, schemaJson,
-      AvroFrames.DefaultSchemaId, Seq(graft.sources.FrameCountStar), Array.empty,
-      dvs = dvs)
+    val r = new graft.sources.AvroFrameAggReader(
+      files.zip(dvs).map { case (f, dv) => graft.sources.FrameMember(f, dv) }, schemaJson,
+      AvroFrames.DefaultSchemaId, Seq(graft.sources.FrameCountStar), Array.empty)
     assert(r.next())
     assert(r.get().getLong(0) == 26, "frames - |dv| must be the exact live count")
     assert(r.decodedSegments == 0L, "COUNT(*) over vectors must not open segments")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.AvroFrames
+import graft.sources.{AvroFrameReader, AvroFrames, FrameMember}
 
 /** Round-14 scan rungs: TopN pushdown (bounded per-split heaps) and
   * DSv2 custom metrics (segments planned/pruned, frames
@@ -138,11 +138,13 @@ class FrameScanSpec extends AnyFunSuite with SparkFixture {
 
   /** Round 15: the plain row scan ships ColumnarBatches — Spark plans
     * a ColumnarToRow above the scan and every value (nulls, strings
-    * with NULL tags, doubles, metadata columns, pushed filters, limit,
-    * multi-file bucket chains) round-trips exactly equal to the row
-    * path.
+    * with NULL tags, doubles, metadata columns, pushed filters,
+    * deletion vectors) round-trips exactly equal to the row path, read
+    * here by driving the row reader directly over the same segments.
     */
   test("columnar read path: executed plan is columnar and value-identical to the row path") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual}
     val dir = Files.createTempDirectory("columnar").toString
     writeFixture(dir)
 
@@ -151,35 +153,49 @@ class FrameScanSpec extends AnyFunSuite with SparkFixture {
     assert(plan.contains("ColumnarToRow"),
       s"plain frame scans must read columnar:\n$plan")
 
-    val rows = spark.read.format("graft.sources.AvroFrameDataSource")
-      .option("path", dir).option("avroSchema", schemaJson)
-      .option("columnar", "false").load()
-    assert(!rows.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    // the row-path reference: every segment of the table, each with its
+    // live deletion vector, through one row reader
+    def rowPath(required: Array[String], pushed: Array[Filter] = Array.empty): Seq[InternalRow] = {
+      val d = new java.io.File(dir)
+      val members = AvroFrames.listSegments(dir).toSeq.map(f => FrameMember(f.getAbsolutePath,
+        graft.sources.FrameDv.liveDvOf(d, f.getName).map(new java.io.File(d, _).getAbsolutePath)))
+      val r = new AvroFrameReader(members, schemaJson, AvroFrames.DefaultSchemaId, required, pushed)
+      val out = Seq.newBuilder[InternalRow]
+      while (r.next()) out += r.get().copy()
+      r.close()
+      out.result()
+    }
+    def str(r: InternalRow, i: Int): String = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    def rows(): Seq[(Long, String, Double)] =
+      rowPath(Array("id", "tag", "v")).map(r => (r.getLong(0), str(r, 1), r.getDouble(2)))
+        .sortBy(_._1)
 
     def canon(df: DataFrame): Seq[(Long, String, Double)] =
       df.collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getString(1), r.getDouble(2))).sortBy(_._1).toSeq
-    assert(canon(cols) == canon(rows))
+    assert(canon(cols) == rows())
     assert(cols.count() == 1000)
 
     // pushed filter + projection + metadata columns through the
     // columnar reader
     val proj = cols.filter(col("v") >= 500.0)
       .select(col("id"), col("tag"), col("_segment"), col("_frame_offset"))
-    val projRows = rows.filter(col("v") >= 500.0)
-      .select(col("id"), col("tag"), col("_segment"), col("_frame_offset"))
+    val projRows = rowPath(Array("id", "tag", AvroFrames.SegmentMetaCol, AvroFrames.OffsetMetaCol),
+      Array(GreaterThanOrEqual("v", 500.0)))
+      .map(r => (r.getLong(0), str(r, 1), str(r, 2), r.getLong(3))).sortBy(_._1)
     assert(proj.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     def canon4(df: DataFrame): Seq[(Long, String, String, Long)] =
       df.collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getString(1), r.getString(2), r.getLong(3)))
         .sortBy(_._1).toSeq
-    assert(canon4(proj) == canon4(projRows) && canon4(proj).nonEmpty)
+    assert(canon4(proj) == projRows && canon4(proj).nonEmpty)
 
     // pushed aggregates and TopN stay row-shaped (summary/heap output)
     val agg = cols.agg(count(lit(1)), min("v"), max("v"))
     assert(!agg.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(agg.collect()(0).getLong(0) == 1000)
     val topn = cols.orderBy(col("v").desc, col("id")).limit(5)
+    assert(!topn.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(topn.collect().length == 5)
 
     // deletion vector applied inside the columnar reader
@@ -191,6 +207,7 @@ class FrameScanSpec extends AnyFunSuite with SparkFixture {
     assert(after.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(after.count() == 1000 - del.length)
     assert(canon(after).map(_._1) == (0L until 1000L).filterNot(del.contains))
+    assert(canon(after) == rows())
   }
 
   /** Round 15: LIKE pushdown. StartsWith prunes segments via sidecar

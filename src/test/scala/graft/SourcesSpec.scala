@@ -212,14 +212,14 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
     // drive the partition reader directly and count what crosses the
     // scan boundary — with the filter pushed, only matching frames
     // become rows
-    import graft.sources.{AvroFrameReader, AvroFrames}
+    import graft.sources.{AvroFrameReader, AvroFrames, FrameMember}
     import org.apache.spark.sql.sources.GreaterThanOrEqual
     val dir = tmp("frames-boundary")
     writeFrames(dir, (1L to 100L).map(i =>
       (i, Some(s"u$i"), i.toDouble, Array[Byte]())))
     val file = new java.io.File(dir, "segment-0.bin").getAbsolutePath
     def countRows(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
-      val r = new AvroFrameReader(file, frameSchema, 7, Array("id"), filters)
+      val r = new AvroFrameReader(Seq(FrameMember(file)), frameSchema, 7, Array("id"), filters)
       var n = 0L
       while (r.next()) n += 1
       r.close(); n
@@ -244,7 +244,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("DSv2 frame source: malformed frames are counted and skipped, not fatal") {
-    import graft.sources.AvroFrameReader
+    import graft.sources.{AvroFrameAggReader, AvroFrameReader, FrameCountStar, FrameMember}
     import graft.streaming.AvroRecords
     val dir = tmp("frames-bad")
     val schema = new org.apache.avro.Schema.Parser().parse(frameSchema)
@@ -260,12 +260,21 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       AvroRecords.frame(7, Array[Byte](0x7f.toByte)))    // truncated body
     writeFrames(dir, Nil, extraJunk = Seq(good(1L)) ++ junk ++ Seq(good(2L)))
     val file = new java.io.File(dir, "segment-0.bin").getAbsolutePath
-    val r = new AvroFrameReader(file, frameSchema, 7, Array("id"), Array.empty)
+    val r = new AvroFrameReader(Seq(FrameMember(file)), frameSchema, 7, Array("id"), Array.empty)
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     while (r.next()) ids += r.get().getLong(0)
     r.close()
     assert(ids.toSeq == Seq(1L, 2L), s"good frames must survive junk: $ids")
     assert(r.malformed == 3L, s"malformed count: ${r.malformed}")
+    // a partial aggregate decoding the same segment (no sidecar) counts
+    // the same junk in its task metrics, next to the frames it folded
+    val agg = new AvroFrameAggReader(Seq(FrameMember(file)), frameSchema, 7,
+      Seq(FrameCountStar), Array.empty)
+    assert(agg.next() && agg.get().getLong(0) == 2L)
+    val m = agg.currentMetricsValues().map(v => v.name -> v.value).toMap
+    agg.close()
+    assert(m.get("frames_malformed").contains(3L), s"agg split metrics: $m")
+    assert(m.get("frames_emitted").contains(2L), s"agg split metrics: $m")
   }
 
   test("DSv2 frame source: one input partition per segment file (split parallelism)") {
@@ -704,14 +713,14 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("DSv2 agg reader: sidecar answers without opening the segment; decode counts match") {
-    import graft.sources.{AvroFrameAggReader, FrameCountStar, FrameMin, FrameMax, FrameCountCol}
+    import graft.sources.{AvroFrameAggReader, FrameCountStar, FrameMin, FrameMax, FrameCountCol, FrameMember}
     import org.apache.spark.sql.sources.GreaterThanOrEqual
     import org.apache.spark.sql.types.LongType
     val dir = tmp("frames-agg-reader")
     writeStatsFixture(dir, n = 50L, parts = 1)
     val seg = graft.sources.AvroFrames.listSegments(dir).head.getAbsolutePath
     // no filters + sidecar: zero decodes
-    val r1 = new AvroFrameAggReader(Seq(seg), frameSchema, 7,
+    val r1 = new AvroFrameAggReader(Seq(FrameMember(seg)), frameSchema, 7,
       Seq(FrameCountStar, FrameCountCol("name"), FrameMin("id", LongType), FrameMax("id", LongType)),
       Array.empty)
     assert(r1.next())
@@ -721,7 +730,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
            row1.getLong(2) == 1L && row1.getLong(3) == 50L)
     assert(!r1.next(), "agg reader emits exactly one row")
     // with a filter: the segment decodes, values reflect the filter
-    val r2 = new AvroFrameAggReader(Seq(seg), frameSchema, 7,
+    val r2 = new AvroFrameAggReader(Seq(FrameMember(seg)), frameSchema, 7,
       Seq(FrameCountStar, FrameMin("id", LongType)),
       Array(GreaterThanOrEqual("score", 40.0)))
     assert(r2.next())
@@ -739,9 +748,10 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       s"sidecar counts (25+25 ≥ 30) must truncate planning to 2 segments:\n$plan")
     assert(lim.collect().length == 30)
     // reader-level early stop, directly observable
-    import graft.sources.AvroFrameReader
+    import graft.sources.{AvroFrameReader, FrameMember}
     val seg = graft.sources.AvroFrames.listSegments(dir).head.getAbsolutePath
-    val r = new AvroFrameReader(seg, frameSchema, 7, Array("id"), Array.empty, limit = 7)
+    val r = new AvroFrameReader(Seq(FrameMember(seg)), frameSchema, 7, Array("id"), Array.empty,
+      limit = 7)
     var n = 0
     while (r.next()) n += 1
     r.close()
@@ -899,7 +909,7 @@ class SourcesSpec extends AnyFunSuite with SparkFixture {
       assert(rs.map(_._3).sorted.toSeq == (0L until rs.length).toSeq,
         s"offsets within $seg must be dense 0-based ordinals")
       val r = new graft.sources.AvroFrameReader(
-        new java.io.File(dir, seg).getAbsolutePath, frameSchema, 7,
+        Seq(graft.sources.FrameMember(new java.io.File(dir, seg).getAbsolutePath)), frameSchema, 7,
         Array("id", "_frame_offset"), Array.empty)
       val direct = scala.collection.mutable.Map.empty[Long, Long]
       while (r.next()) direct(r.get().getLong(1)) = r.get().getLong(0)
